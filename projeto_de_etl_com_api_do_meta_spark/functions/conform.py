@@ -20,25 +20,35 @@ from pyspark.sql import functions as F
 
 
 def backfill(df: DataFrame, defaults: dict[str, tuple[str, object]]) -> DataFrame:
-    """Add each missing column as a typed literal default.
+    """Add each missing column as a typed literal default, in one projection.
 
     ``defaults`` maps column -> (spark type name, default value); default
     None produces a typed null (ids/names), 0 the metric backfill."""
     cols = set(df.columns)
-    for name, (typ, value) in defaults.items():
-        if name not in cols:
-            df = df.withColumn(name, F.lit(value).cast(typ))
-    return df
+    missing = {
+        name: F.lit(value).cast(typ)
+        for name, (typ, value) in defaults.items()
+        if name not in cols
+    }
+    return df.withColumns(missing) if missing else df
 
 
 def conform_select(df: DataFrame, wanted: list[str]) -> DataFrame:
     """Select the fixed column list, keeping only columns present, dropping
     extras, de-duplicating the list while preserving first-seen order."""
-    seen: dict[str, None] = {}
-    for c in wanted:
-        if c in df.columns and c not in seen:
-            seen[c] = None
-    return df.select(*seen)
+    present = set(df.columns)
+    return df.select(*dict.fromkeys(c for c in wanted if c in present))
+
+
+def quote(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def count_sql(expr: str) -> str:
+    """SQL coercing ``expr`` to a count: floored BIGINT, unparseable or
+    NULL -> 0 (ANSI-safe try_cast)."""
+    return f"coalesce(CAST(floor(try_cast({expr} AS DOUBLE)) AS BIGINT), 0L)"
 
 
 def coerce_numeric(
@@ -50,28 +60,25 @@ def coerce_numeric(
 
     Monetary columns stay DoubleType (reference accepts FP money,
     SURVEY §7); count columns become LongType (pandas nullable Int64
-    analog, 0-backfilled)."""
-    out = df
-    for c in monetary_cols:
-        if c in out.columns:
-            out = out.withColumn(
-                c, F.coalesce(F.col(c).try_cast("double"), F.lit(0.0))
-            )
+    analog, 0-backfilled).  One projection built from SQL text (one parse
+    per column); a column named in both lists is coerced to money first,
+    then counted."""
+    present = set(df.columns)
+    exprs = {
+        c: f"coalesce(try_cast({quote(c)} AS DOUBLE), 0.0D)"
+        for c in monetary_cols
+        if c in present
+    }
     for c in count_cols:
-        if c in out.columns:
-            out = out.withColumn(
-                c,
-                F.coalesce(
-                    F.floor(F.col(c).try_cast("double")).cast("long"), F.lit(0)
-                ),
-            )
-    return out
+        if c in present:
+            exprs[c] = count_sql(exprs.get(c, quote(c)))
+    return df.withColumns({c: F.expr(e) for c, e in exprs.items()}) if exprs else df
 
 
 def coerce_dates(df: DataFrame, cols: list[str]) -> DataFrame:
     """to_datetime(errors='coerce').dt.date equivalent: bad values -> null."""
-    out = df
-    for c in cols:
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c).cast("string").try_cast("date"))
-    return out
+    present = set(df.columns)
+    exprs = {
+        c: F.col(c).cast("string").try_cast("date") for c in cols if c in present
+    }
+    return df.withColumns(exprs) if exprs else df

@@ -37,6 +37,15 @@ def safe_div(num: Column | str, den: Column | str, default: float = 0.0) -> Colu
     )
 
 
+def safe_div_sql(num: str, den: str, default: float = 0.0) -> str:
+    """``safe_div`` as SQL text over two SQL expressions, for projections
+    built with one ``selectExpr``."""
+    return (
+        f"coalesce(CASE WHEN {den} IS NOT NULL AND {den} != 0 "
+        f"THEN {num} / {den} END, {float(default)!r}D)"
+    )
+
+
 def dec(c: Column | str, typ: str = DEC) -> Column:
     """Cast to exact decimal for order-independent aggregation."""
     return _col(c).cast(typ)

@@ -3,10 +3,11 @@ numeric columns, replacing the reference's per-row ``iterrows`` loop
 (transform.py:22-39) with JVM-side array expressions.
 
 Two variants:
-- ``normalize_actions_fixed``   : fixed whitelist schema — per-column
+- ``normalize_actions_fixed``   : fixed whitelist schema — one ``transform``
+  sanitizes every entry's type once, then per-column
   ``element_at(filter(...), -1)`` extraction (last occurrence wins, matching
-  the reference's dict-overwrite order).  Shuffle-free, codegen-friendly,
-  schema known at plan time — the 100 TB default.
+  the reference's dict-overwrite order), all in SQL expressions.
+  Shuffle-free, schema known at plan time — the 100 TB default.
 - ``normalize_actions_dynamic`` : explode + pivot — column set discovered
   from the data (costs an extra values-scan job), kept for parity with the
   reference's data-dependent schema (SURVEY §1.2).
@@ -16,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.conform import count_sql, quote
 
 #: Whitelisted action columns (already '.'-sanitized), mirroring the
 #: reference's ALLOWED_ACTION_COLUMNS contract (transform.py:7-18).
@@ -57,18 +60,18 @@ NON_COUNT_COLS: tuple[str, ...] = (
 )
 
 
-def _sanitized_type(entry) -> F.Column:
-    """action_type with the '.' -> '_' sanitize (transform.py:35)."""
-    return F.regexp_replace(entry["action_type"], r"\.", "_")
+#: Working column holding the sanitized action list between the two
+#: projections of ``normalize_actions_fixed``.
+_SANITIZED = "__actions_sanitized"
 
 
-def action_value(actions_col: F.Column, sanitized_name: str) -> F.Column:
-    """Value of the LAST list entry whose sanitized type matches (the
-    reference's later-entries-overwrite semantics), as a raw string."""
-    matches = F.filter(
-        actions_col, lambda a: _sanitized_type(a) == F.lit(sanitized_name)
-    )
-    return F.element_at(matches, -1)["value"]
+def _last_count_expr(name: str) -> str:
+    """Value of the LAST sanitized entry named ``name`` (the reference's
+    later-entries-overwrite semantics), floored to a count; absent or
+    unparseable -> 0."""
+    literal = name.replace("\\", "\\\\").replace("'", "\\'")
+    last = f"element_at(filter({_SANITIZED}, a -> a.t = '{literal}'), -1).v"
+    return f"{count_sql(last)} AS {quote(name)}"
 
 
 def normalize_actions_fixed(
@@ -80,21 +83,18 @@ def normalize_actions_fixed(
     absent/unparseable -> 0 (coerce semantics, transform.py:51-61).
 
     Non-whitelisted action types are dropped — the whitelist projection the
-    reference applies at final-column selection (transform.py:152)."""
-    acts = F.coalesce(
-        F.col(actions_col), F.array().cast("array<struct<action_type:string,value:string>>")
+    reference applies at final-column selection (transform.py:152).  Two
+    projections whatever the whitelist's length: the first sanitizes each
+    entry's type ('.' -> '_', transform.py:35) once, the second extracts
+    every whitelisted column from that list.  A NULL list, like an empty
+    one, gives 0 everywhere."""
+    keep = [quote(c) for c in df.columns if c != actions_col]
+    sanitized = df.selectExpr(
+        *keep,
+        f"transform({quote(actions_col)}, a -> named_struct("
+        f"'t', replace(a.action_type, '.', '_'), 'v', a.value)) AS {_SANITIZED}",
     )
-    wide = df.select(
-        "*",
-        *[
-            F.coalesce(
-                F.floor(action_value(acts, name).try_cast("double")).cast("long"),
-                F.lit(0),
-            ).alias(name)
-            for name in whitelist
-        ],
-    )
-    return wide.drop(actions_col)
+    return sanitized.selectExpr(*keep, *[_last_count_expr(n) for n in whitelist])
 
 
 def normalize_actions_dynamic(

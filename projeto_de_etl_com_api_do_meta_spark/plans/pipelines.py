@@ -20,8 +20,9 @@ from ..functions.conform import (
     coerce_dates,
     coerce_numeric,
     conform_select,
+    quote,
 )
-from ..functions.safe_math import safe_div
+from ..functions.safe_math import safe_div_sql
 from ..operators.actions_pivot import (
     ALLOWED_ACTION_COLUMNS,
     NON_COUNT_COLS,
@@ -41,32 +42,34 @@ def _normalize(df: DataFrame) -> DataFrame:
     """Pivot actions + coerce numerics (reference _normalize_actions,
     transform.py:22-63): monetary stays double, everything else long, 0-fill."""
     wide = normalize_actions_fixed(df.drop("action_values"))
-    wide = backfill(wide, {m: ("long", 0) for m in REQUIRED_METRICS if m != "spend"})
-    wide = backfill(wide, {"spend": ("double", 0.0)})
+    defaults = {m: ("long", 0) for m in REQUIRED_METRICS if m != "spend"}
+    wide = backfill(wide, {**defaults, "spend": ("double", 0.0)})
     count_cols = [c for c in wide.columns if c not in NON_COUNT_COLS and c != "_arrival"]
     return coerce_numeric(wide, monetary_cols=["spend"], count_cols=count_cols)
 
 
+_RENAMES = {
+    "impressions": "total_impressions",
+    "clicks": "total_clicks",
+    "spend": "total_spend",
+    "lead": "total_leads",
+}
+
+
 def _recalculate_metrics(df: DataFrame) -> DataFrame:
     """Rename to total_*, add total_successes, safe-div ratios
-    (reference _recalculate_metrics, transform.py:68-88: x/0 and 0/0 -> 0)."""
-    renames = {
-        "impressions": "total_impressions",
-        "clicks": "total_clicks",
-        "spend": "total_spend",
-        "lead": "total_leads",
+    (reference _recalculate_metrics, transform.py:68-88: x/0 and 0/0 -> 0),
+    as one projection."""
+    src = {_RENAMES.get(c, c): quote(c) for c in df.columns}  # output -> input
+    ratios = {
+        "cpc": safe_div_sql(src["total_spend"], src["total_clicks"]),
+        "cpl": safe_div_sql(src["total_spend"], src["total_leads"]),
+        "ctr": safe_div_sql(src["total_clicks"], src["total_impressions"]),
     }
-    out = df
-    for old, new in renames.items():
-        if old in out.columns:
-            out = out.withColumnRenamed(old, new)
-    if "total_successes" not in out.columns:
-        out = out.withColumn("total_successes", F.lit(0).cast("long"))
-    return (
-        out.withColumn("cpc", safe_div("total_spend", "total_clicks"))
-        .withColumn("cpl", safe_div("total_spend", "total_leads"))
-        .withColumn("ctr", safe_div("total_clicks", "total_impressions"))
-    )
+    out = [f"{ratios.pop(name, c)} AS {quote(name)}" for name, c in src.items()]
+    if "total_successes" not in src:
+        out.append("0L AS total_successes")
+    return df.selectExpr(*out, *(f"{e} AS {quote(n)}" for n, e in ratios.items()))
 
 
 def run_dimension(source: MetaRestSource) -> DataFrame:
@@ -105,25 +108,13 @@ def run_campaign_performance(source: MetaRestSource) -> DataFrame:
     in row order -> first(ignorenulls) over the _arrival-ordered window."""
     norm = _normalize(_with_arrival(source.read_insights(())))
     value_cols = [c for c in norm.columns if c not in _KEYS + ["_arrival"]]
-    w = (
-        Window.partitionBy(*_KEYS)
-        .orderBy("_arrival")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    firsts = norm.select(
+    by_arrival = f"PARTITION BY {', '.join(_KEYS)} ORDER BY _arrival"
+    whole = f"{by_arrival} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
+    agg = norm.selectExpr(
         *_KEYS,
-        "_arrival",
-        *[
-            F.first(c, ignorenulls=True).over(w).alias(c)
-            for c in value_cols
-        ],
-    )
-    wmin = Window.partitionBy(*_KEYS).orderBy("_arrival")
-    agg = (
-        firsts.withColumn("_rn", F.row_number().over(wmin))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_arrival")
-    )
+        *[f"first({quote(c)}, true) OVER ({whole}) AS {quote(c)}" for c in value_cols],
+        f"row_number() OVER ({by_arrival}) AS _rn",
+    ).where("_rn = 1")
     final = _recalculate_metrics(agg)
     final = conform_select(
         final,
@@ -153,7 +144,9 @@ def run_lead_insights(source: MetaRestSource) -> DataFrame:
     sides 0-filled — including *string* dims (pandas fillna(0) drops int 0
     into object columns; here the literal string '0')."""
     demo = _normalize(source.read_insights(("age", "gender")))
-    geo = _normalize(source.read_insights(("region",)))
+    # The geo side keeps only region + keys, which normalization leaves as
+    # they are, so it is not normalized.
+    geo = source.read_insights(("region",))
 
     geo_subset = conform_select(geo, ["region"] + _KEYS).distinct()
     joined = demo.join(geo_subset, on=_KEYS, how="full_outer")
@@ -168,7 +161,7 @@ def run_lead_insights(source: MetaRestSource) -> DataFrame:
         for f in joined.schema.fields
         if f.dataType.typeName() == "string" and f.name not in _KEYS
     ]
-    filled = joined.na.fill(0, numeric_cols).na.fill("0", string_cols)
+    filled = joined.na.fill({**dict.fromkeys(numeric_cols, 0), **dict.fromkeys(string_cols, "0")})
 
     final = _recalculate_metrics(filled)
     group_keys = _KEYS + ["age", "gender", "region"]

@@ -1,6 +1,7 @@
 """SparkSession builder tuned for the engine.
 
-Scale posture (100 TB / 1000-executor design, tested on local[32]):
+Scale posture (100 TB / 1000-executor design; locally ``local[N]`` with N the
+CPUs the process may use, unless ``SPARK_GRAFT_CPUS`` says otherwise):
 - AQE on: runtime coalescing of post-shuffle partitions + skew-join splitting
   replace hand-tuned ``spark.sql.shuffle.partitions`` at scale.
 - Arrow on: every pandas interop (mapInPandas / applyInPandas / pandas_udf)
@@ -21,6 +22,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    count, so a pinned or containerized process gets no idle task slots)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API off Linux
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "projeto-etl-meta-spark",
     master: str | None = None,
@@ -28,7 +38,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     # One BLAS thread per task: parallelism belongs to Spark's task
     # scheduler, not to numpy's thread pool.  Without this, every Python

@@ -9,9 +9,10 @@ The reference loads via staging-table + one set-based
   connection, drop staging in a finally-block.  SQL generation is pure and
   unit-tested; execution requires a live database (none in this
   environment), so ``write`` is import/connection-gated.
-- ``parquet_upsert`` — lakehouse variant: key-based merge into a parquet
-  target (read target ∖ batch keys, union batch, atomic swap).  Idempotent:
-  re-running the same batch is a no-op; used by the streaming foreachBatch
+- ``parquet_upsert`` — lakehouse variant: one-pass key-based merge into a
+  parquet target (tag target/batch rows, union, keep one row per key by
+  one window, atomic swap).  Idempotent: re-running the same batch is a
+  no-op, NULL key components included; used by the streaming foreachBatch
   sink.  At scale the same call-shape maps onto Delta ``MERGE INTO``.
 
 Conflict keys per table follow load.py:49-63 (schemas.UPSERT_KEYS); JSONB
@@ -144,22 +145,41 @@ def parquet_upsert(
 ) -> None:
     """Key-based MERGE into a parquet table with an atomic directory swap.
 
-    Batch is deduplicated per key first (Delta MERGE's multi-match rule;
-    keep-last by ``order_col`` when given, matching the reference's
-    last-write-wins upsert)."""
-    batch = _dedup_batch(batch, keys, order_col)
+    One pass: target rows are tagged source 0 and batch rows source 1, the
+    two are unioned, and one ``row_number`` window per key, ordered by
+    (source desc, ``order_col`` desc), keeps row 1.  So a batch row beats
+    the stored row for its key, and within the batch the keep-last rule of
+    Delta MERGE's multi-match dedup applies (by ``order_col`` when given,
+    else an arbitrary row).  The window groups NULL key components
+    together, so keys with NULLs merge like any other and re-applying a
+    batch is a no-op.
 
-    if os.path.exists(target_path):
+    Cost: the batch plan is evaluated once, the union is shuffled once by
+    key and sorted within partitions, and the whole target is rewritten
+    (clustered by key) into a fresh directory swapped in by rename.  The
+    first write, with no target yet, is the deduplicated batch alone."""
+    if not os.path.exists(target_path):
+        merged = _dedup_batch(batch, keys, order_col)
+    else:
         target = spark.read.parquet(target_path)
-        missing = [c for c in target.columns if c not in batch.columns]
+        cols = target.columns
+        missing = [c for c in cols if c not in batch.columns]
         if missing:
             raise ValueError(f"batch missing target columns: {missing}")
-        kept = target.join(batch.select(*keys).distinct(), on=keys, how="left_anti")
-        merged = kept.select(*target.columns).unionByName(
-            batch.select(*target.columns)
+        # A batch-only order column still ranks the batch; stored rows
+        # always lose to batch rows, so their value for it is irrelevant.
+        extra = [order_col] if order_col and order_col not in cols else []
+        src, rn = "__upsert_src", "__upsert_rn"
+        both = target.select(
+            *cols, *[F.lit(None).alias(c) for c in extra], F.lit(0).alias(src)
+        ).unionByName(batch.select(*cols, *extra, F.lit(1).alias(src)))
+        order = [F.col(src).desc()] + ([F.col(order_col).desc()] if order_col else [])
+        w = Window.partitionBy(*keys).orderBy(*order)
+        merged = (
+            both.withColumn(rn, F.row_number().over(w))
+            .where(F.col(rn) == 1)
+            .select(*cols)
         )
-    else:
-        merged = batch
 
     tmp = tempfile.mkdtemp(prefix="upsert_", dir=os.path.dirname(target_path) or ".")
     out = os.path.join(tmp, "data")
@@ -192,8 +212,8 @@ def delta_available() -> bool:
 def delta_merge_condition(keys: list[str]) -> str:
     """The MERGE ON condition for a keyed upsert (pure; unit-tested
     without jars). Null-safe equality (``<=>``) so NULL key components
-    match themselves — same semantics parquet_upsert's left_anti join
-    gives for free."""
+    match themselves — the semantics parquet_upsert's per-key window
+    gives (a window partition groups NULLs together)."""
     if not keys:
         raise ValueError("delta upsert requires at least one key column")
     return " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)

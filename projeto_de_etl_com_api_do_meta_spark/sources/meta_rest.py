@@ -1,8 +1,11 @@
 """Meta-shaped REST source (SURVEY §2.1 S1-S4, §4 pushdown glue).
 
 Phase-1 architecture (sufficient at the reference's scale, SURVEY §7 M5):
-driver-side paginated fetch -> ``spark.createDataFrame(rows, explicit
-schema)``.  The *query spec* — fields (column pruning), filtering (predicate
+paginated fetch in the Spark application process -> one Arrow table under
+the explicit schema contract -> ``spark.createDataFrame(table)``: rows of
+the expected shape are converted columnar in C++, with no per-row Python
+verification and no JVM unpickling (``_arrow_table`` says what happens to
+the others).  The *query spec* — fields (column pruning), filtering (predicate
 pushdown), time_range (partition pruning), level/breakdowns (aggregate
 pushdown) — is executed by the endpoint, exactly as the reference pushes it
 to Meta's servers (extract.py:125-128,199-207).
@@ -23,7 +26,11 @@ import math
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from .. import schemas
 from . import meta_fixtures
@@ -116,12 +123,38 @@ _BREAKDOWN_SCHEMAS = {
 }
 
 
+def _arrow_table(rows: list[dict], contract: T.StructType) -> pa.Table:
+    """Rows -> one Arrow table under ``contract``: a missing key is NULL,
+    extra keys are ignored, and a malformed shape (a string where a list or
+    struct belongs) raises.
+
+    Rows Arrow cannot take as they are — a non-string scalar in a string
+    field, a struct given as a list — are verified and converted by the
+    row-based ``createDataFrame``'s own rules (``1`` -> ``'1'``, ``True`` ->
+    ``'true'``, a list fills a struct by position) before the table is
+    built, so results match it.  One difference: bytes in a string field
+    decode as UTF-8 instead of becoming their ``repr``; JSON has no bytes."""
+    schema = to_arrow_schema(contract)
+    try:
+        return pa.Table.from_pylist(rows, schema=schema)
+    except (pa.ArrowTypeError, pa.ArrowInvalid):
+        verify, convert = _make_type_verifier(contract), _create_converter(contract)
+        converted = []
+        for row in rows:
+            verify(row)
+            converted.append(dict(zip(contract.names, convert(row))))
+        return pa.Table.from_pylist(converted, schema=schema)
+
+
 class MetaRestSource:
     """Reads Meta-shaped edges into DataFrames with fixed schema contracts."""
 
     def __init__(self, spark: SparkSession, transport=None) -> None:
         self.spark = spark
         self.transport = transport or FakeMetaTransport()
+
+    def _frame(self, rows: list[dict], contract: T.StructType) -> DataFrame:
+        return self.spark.createDataFrame(_arrow_table(rows, contract), schema=contract)
 
     # -- S1: entity scan with IN-filter pushdown (extract.py:116-136) --------
     def read_ads(
@@ -139,7 +172,7 @@ class MetaRestSource:
             ],
         }
         rows = [r for page in self.transport.get_ads(AD_FIELDS, params) for r in page]
-        return self.spark.createDataFrame(rows, schema=schemas.RAW_ADS)
+        return self._frame(rows, schemas.RAW_ADS)
 
     # -- S2: aggregated scan (extract.py:190-229) ----------------------------
     def read_insights(
@@ -157,15 +190,17 @@ class MetaRestSource:
             params["time_range"] = time_range
         pages = self.transport.get_insights(INSIGHT_FIELDS, params)
         rows = [r for page in pages for r in page]
-        return self.spark.createDataFrame(rows, schema=_BREAKDOWN_SCHEMAS[breakdowns])
+        return self._frame(rows, _BREAKDOWN_SCHEMAS[breakdowns])
 
     # -- S3: correlated per-form scan, executor-parallel (extract.py:60-100) -
     def read_leads(self, time_range: dict | None = None) -> DataFrame:
         form_pages = self.transport.get_lead_gen_forms(["id"], {"limit": 100})
         form_ids = [r["id"] for page in form_pages for r in page]
-        forms_df = self.spark.createDataFrame(
-            [(f,) for f in form_ids], "form_id string"
-        ).repartition(max(1, min(len(form_ids), 8)), "form_id")
+        # One slice per form up to 8, cut before Spark sees them: no shuffle.
+        slices = self.spark.sparkContext.parallelize(
+            [(f,) for f in form_ids], max(1, min(len(form_ids), 8))
+        )
+        forms_df = self.spark.createDataFrame(slices, "form_id string")
 
         transport = self.transport
         lead_cols = list(LEAD_FIELDS)

@@ -63,6 +63,49 @@ def test_parquet_upsert_batch_dedup_keep_last(spark, tmp_path):
     assert _read(spark, target) == {(1,): ("new", 2)}
 
 
+def test_parquet_upsert_null_key_components_idempotent(spark, tmp_path):
+    """A key with a NULL component matches itself, as Delta's ``<=>``
+    does: re-applying a batch keeps one row per key, and an update
+    replaces the stored row."""
+    target = str(tmp_path / "t3")
+    schema = "k1 string, k2 string, v int"
+    batch = spark.createDataFrame([(None, "x", 1), ("a", None, 2), (None, None, 3)], schema)
+
+    def rows():
+        return sorted(
+            (tuple(r) for r in spark.read.parquet(target).collect()),
+            key=lambda r: tuple((c is None, c) for c in r),
+        )
+
+    for _ in range(3):
+        parquet_upsert(spark, batch, target, keys=["k1", "k2"])
+        assert rows() == [("a", None, 2), (None, "x", 1), (None, None, 3)]
+
+    update = spark.createDataFrame([(None, "x", 9)], schema)
+    parquet_upsert(spark, update, target, keys=["k1", "k2"])
+    assert rows() == [("a", None, 2), (None, "x", 9), (None, None, 3)]
+
+
+def test_parquet_upsert_batch_beats_target_whatever_its_order(spark, tmp_path):
+    """``order_col`` ranks rows within a batch only: a batch row replaces
+    the stored row even when its order value is lower, and a batch-only
+    order column still picks the batch's last row."""
+    target = str(tmp_path / "t4")
+    first = spark.createDataFrame([(1, "stored", 5), (2, "kept", 5)], "k int, v string, ts int")
+    parquet_upsert(spark, first, target, keys=["k"], order_col="ts")
+    late = spark.createDataFrame([(1, "older", 1), (1, "newer", 2)], "k int, v string, ts int")
+    parquet_upsert(spark, late, target, keys=["k"], order_col="ts")
+    assert _read(spark, target) == {(1,): ("newer", 2), (2,): ("kept", 5)}
+
+    plain = str(tmp_path / "t5")
+    parquet_upsert(spark, spark.createDataFrame([(1, "a")], "k int, v string"), plain, ["k"])
+    ranked = spark.createDataFrame([(1, "b", 2), (1, "c", 1)], "k int, v string, seq int")
+    parquet_upsert(spark, ranked, plain, ["k"], order_col="seq")
+    got = spark.read.parquet(plain)
+    assert got.columns == ["k", "v"]
+    assert [tuple(r) for r in got.collect()] == [(1, "b")]
+
+
 def test_delta_merge_condition_null_safe_and_guarded():
     """Pure merge-condition builder (no jars needed): null-safe equality
     per key, non-empty key list enforced."""
